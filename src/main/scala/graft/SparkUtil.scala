@@ -46,6 +46,23 @@ object SparkUtil {
     else ds.localCheckpoint(true)
   }
 
+  /** Free a [[stableCheckpoint]] result now instead of when the
+    * ContextCleaner notices it is unreachable: unpersist its local
+    * blocks, or delete its reliable checkpoint files. Anything still
+    * reading it afterwards fails on the missing blocks or files.
+    */
+  def releaseCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Unit =
+    ds.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(p, true)
+        }
+      case _ =>
+    }
+
   def ensureParallelism(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // no partition introspection on streams
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -81,24 +98,27 @@ object SparkUtil {
     val byCount = math.max(1, math.min(cap, nParts))
     // The checkpointed RDD rides the analyzed plan's LogicalRDD; its
     // storage info is published by the status listener, which is
-    // asynchronous to the persist job — bounded retry, then fall back.
-    val rddId = materialized.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd.id)
+    // asynchronous to the persist job — bounded retry until it surfaces,
+    // then size by its bytes. Nothing to wait for when the RDD has no
+    // partitions or holds no blocks (the reliable checkpoint mode), and
+    // surfaced-but-zero bytes fall back at once.
+    val rdd = materialized.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.partitions.nonEmpty && lr.rdd.getStorageLevel.isValid =>
+        Some(lr.rdd)
       case _ => None
     }
-    rddId.flatMap { id =>
-      var bytes = 0L
+    rdd.flatMap { r =>
+      var info: Option[org.apache.spark.storage.RDDInfo] = None
       var tries = 0
-      while (bytes == 0L && tries < 10) {
-        bytes = spark.sparkContext.getRDDStorageInfo
-          .find(i => i.id == id && i.numCachedPartitions > 0)
-          .map(i => i.memSize + i.diskSize).getOrElse(0L)
-        if (bytes == 0L) { Thread.sleep(20); tries += 1 }
+      while (info.isEmpty && tries < 10) {
+        info = spark.sparkContext.getRDDStorageInfo
+          .find(i => i.id == r.id && i.numCachedPartitions > 0)
+        if (info.isEmpty) { Thread.sleep(20); tries += 1 }
       }
-      if (bytes > 0L)
-        Some(math.max(1, math.min(byCount,
+      info.map(i => i.memSize + i.diskSize).filter(_ > 0L).map(bytes =>
+        math.max(1, math.min(byCount,
           ((bytes + LoopPartitionBytes - 1) / LoopPartitionBytes).toInt)))
-      else None
     }.getOrElse(byCount)
   }
 

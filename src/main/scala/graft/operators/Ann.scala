@@ -56,6 +56,14 @@ object Ann {
   def cosineCol(v: Column, q: Array[Float]): Column =
     graft.functions.CosineSimilarity(v, typedlit(q))
 
+  /** `c IN values` over ONE array literal. An IN list generates code
+    * with its values inlined, so every new probe set compiles a new
+    * class; an array literal reaches generated code by reference, so a
+    * repeat search with other probes reuses the compiled plan.
+    */
+  def isInLit(c: Column, values: Seq[Int]): Column =
+    array_contains(typedlit(values.toArray), c)
+
   /** Exact cosine top-k: one scan + TakeOrderedAndProject. */
   def bruteForceKnn(df: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int): DataFrame =

@@ -34,8 +34,9 @@ object IvfSq {
   final class Model(val ivf: Ann.Ivf, val sq: Sq.Model)
       extends Serializable
 
-  private def centsLit(ivf: Ann.Ivf): Column =
-    array(ivf.centroidsE6.map(c => array(c.map(lit): _*)): _*)
+  /** The centroids as ONE literal (see [[Sq.litArr]]). */
+  private[operators] def centsLit(ivf: Ann.Ivf): Column =
+    typedlit(ivf.centroidsE6)
 
   /** Residual in e6 space: e6(v) − centroid(cid), per dimension. */
   private def residualE6(vecCol: Column, cidCol: Column,
@@ -95,7 +96,7 @@ object IvfSq {
       q: Array[Float], k: Int, nprobe: Int = 2, pool: Int = 50): DataFrame = {
     val qE6 = q.map(x => math.floor(x.toDouble * 1e6).toLong)
     val probes = m.ivf.probeCentroids(q, nprobe)
-    val pruned = codes.filter(col(cidCol).isin(probes: _*))
+    val pruned = codes.filter(Ann.isInLit(col(cidCol), probes))
     val approx = zip_with(element_at(centsLit(m.ivf), col(cidCol) + 1),
       Sq.dequantCol(col(codeCol), m.sq), (c, r) => c + r)
     val poolIds = pruned

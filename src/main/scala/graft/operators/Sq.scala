@@ -68,7 +68,11 @@ object Sq {
     new Model(mn, mx)
   }
 
-  private[operators] def litArr(a: Array[Long]): Column = array(a.map(lit): _*)
+  /** A constant long array as ONE literal. An `array(lit…)` tree folds
+    * to the same value, but the driver first analyses and optimizes one
+    * node per element, on every query that builds it.
+    */
+  private[operators] def litArr(a: Array[Long]): Column = typedlit(a)
 
   /** int8 codes (as ints 0..255): ((x − mn) · 255) div range, per dim. */
   def quantizeCol(vecCol: Column, m: Model): Column =

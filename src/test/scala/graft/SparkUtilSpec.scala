@@ -61,6 +61,32 @@ class SparkUtilSpec extends SparkSpec {
     } finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
   }
 
+  test("loopPartitions returns at once when no block can surface, with " +
+      "the partition count the bounded wait fell back to") {
+    import org.apache.spark.sql.types._
+    def timed(df: org.apache.spark.sql.DataFrame): (Int, Long) = {
+      val t0 = System.nanoTime()
+      val n = SparkUtil.loopPartitions(df)
+      (n, (System.nanoTime() - t0) / 1000000L)
+    }
+    // An empty input with no partitions at all.
+    val none = SparkUtil.stableCheckpoint(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("id", LongType)))))
+    assert(none.rdd.getNumPartitions == 0)
+    val (n0, ms0) = timed(none)
+    assert(n0 == 1 && ms0 < 200, s"$n0 partitions after $ms0 ms")
+    // The reliable mode writes files, never blocks.
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ck").toString)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val durable = SparkUtil.stableCheckpoint(spark.range(0, 100, 1, 3).toDF())
+      val (n1, ms1) = timed(durable)
+      assert(n1 == 3 && ms1 < 200, s"$n1 partitions after $ms1 ms")
+    } finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
+  }
+
   test("ensureParallelism raises split-sparse input to default parallelism") {
     val one = spark.range(1000).coalesce(1)
     assert(one.rdd.getNumPartitions == 1)

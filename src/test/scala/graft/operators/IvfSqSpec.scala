@@ -54,4 +54,18 @@ class IvfSqSpec extends SparkSpec {
       k = 5).collect().map(_.toSeq).toSeq
     assert(viaStored == viaFloats)
   }
+
+  test("centsLit is one literal holding the values of the nested " +
+      "array(lit…) form") {
+    val folded = IvfSq.centsLit(m.ivf)
+    val nodes = spark.range(1).select(folded).queryExecution.analyzed
+      .expressions.flatMap(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l })
+    assert(nodes.size == 1, s"one literal expected, got $nodes")
+    val tree = array(m.ivf.centroidsE6.map(c => array(c.map(lit): _*)): _*)
+    val r = spark.range(1).select(folded, tree).head()
+    val got = r.getSeq[scala.collection.Seq[Long]](0)
+    assert(got == r.getSeq[scala.collection.Seq[Long]](1))
+    assert(got.map(_.toSeq) == m.ivf.centroidsE6.map(_.toSeq).toSeq)
+  }
 }

@@ -108,4 +108,27 @@ class SqSpec extends SparkSpec {
     val ord = got.map(r => (r.getLong(2), r.getLong(0)))
     assert(ord.sortBy(identity).toSeq == ord.toSeq)
   }
+
+  test("litArr is one literal holding the values of the array(lit…) form") {
+    val a = Array(0L, -1L, Long.MaxValue, Long.MinValue, 500000L)
+    val folded = Sq.litArr(a)
+    val nodes = spark.range(1).select(folded).queryExecution.analyzed
+      .expressions.flatMap(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l })
+    assert(nodes.size == 1, s"one literal expected, got $nodes")
+    val r = spark.range(1).select(folded.as("t"),
+      array(a.map(lit): _*).as("o")).head()
+    assert(r.getSeq[Long](0) == r.getSeq[Long](1))
+    assert(r.getSeq[Long](0) == a.toSeq)
+    // And through the quantizer, the bounds' consumer.
+    val m = Sq.fit(tiny, "embedding", Dim)
+    val viaTree = zip_with(
+      zip_with(Sq.e6(col("embedding")), array(m.mnE6.map(lit): _*),
+        (x, mn) => x - mn),
+      array(m.rangeE6.map(lit): _*),
+      (df, rg) => Sq.intDiv(df * 255L, rg).cast("int"))
+    val both = tiny.select(Sq.quantizeCol(col("embedding"), m), viaTree)
+      .collect()
+    both.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1)))
+  }
 }
